@@ -1,4 +1,6 @@
 package graft
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main — one JSON line per run for the driver's BENCH_r{N}.
@@ -100,10 +102,20 @@ object Bench {
     val queries = SparkEntry.queries
       .filterNot { case (n, _) => SparkEntry.benchExempt(n) }
       .toSeq.sortBy(_._1)
+    def errText(e: Throwable): String =
+      Option(e.getMessage).getOrElse(e.getClass.getName)
+        .replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200)
     // Warmup: one untimed full sweep (JVM + per-query codegen +
     // parquet footer caches); the timed sweep then measures plan cost.
-    queries.foreach { case (_, fn) =>
-      try force(fn(spark, sfDir)) catch { case _: Throwable => () }
+    // A failing warmup query is reported on stderr and in the
+    // artifact's `warmup_errors`, not dropped.
+    val warmupErrors = scala.collection.mutable.LinkedHashMap[String, String]()
+    queries.foreach { case (name, fn) =>
+      try force(fn(spark, sfDir)) catch {
+        case NonFatal(e) =>
+          warmupErrors(name) = errText(e)
+          System.err.println(s"[graft] bench warmup failed: $name: ${warmupErrors(name)}")
+      }
     }
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
@@ -125,9 +137,8 @@ object Bench {
         val t0 = System.nanoTime()
         val ok =
           try { force(fn(spark, sfDir)); true } catch {
-            case e: Throwable =>
-              errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-                .replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200)
+            case NonFatal(e) =>
+              errors(name) = errText(e)
               false
           }
         val built = graft.sources.ArtifactGuard.buildEventCount - b0
@@ -143,8 +154,9 @@ object Bench {
     val qs = results.map { case (k, v) =>
       s"\"" + k + "\":" + v.map(_.toString).getOrElse("null")
     }.mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => s"\"$k\":\"$v\"" }
-      .mkString("{", ",", "}")
+    def jsonMap(m: collection.Map[String, String]): String =
+      m.map { case (k, v) => s"\"$k\":\"$v\"" }.mkString("{", ",", "}")
+    val errJson = jsonMap(errors)
     val total = results.flatMap(_._2).sum
     // Per-sweep totals (successful timings only) ride the artifact so a
     // cross-round regression list can be checked against the run's own
@@ -158,7 +170,7 @@ object Bench {
     val loadPost = loadAvg()
     val envJson = s""""widening":$widening,"spin_sec":[$spinPre,$spinPost],""" +
       s""""spin_checksum":${spinSink.get},"load_avg":[$loadPre,$loadPost]"""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","sweep_totals":$sweepTotals,"artifact_builds_in_timed":$rebuildJson,$envJson,"queries":$qs,"errors":$errJson,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","sweep_totals":$sweepTotals,"artifact_builds_in_timed":$rebuildJson,$envJson,"queries":$qs,"errors":$errJson,"warmup_errors":${jsonMap(warmupErrors)},"sf":"$sfDir"}"""
     // The driver archives only the tail of stdout (r5 lost q01–q36's
     // numbers to a 2000-char truncation); keep the full artifact
     // on disk so every round is reconstructable per-query.
@@ -216,9 +228,13 @@ object Bench {
             s""""geomean_vs_archive":${math.rint(geo * 1000) / 1000},""" +
             s""""top_regressed":$reg,"top_improved":$imp}"""
         }
-      } catch { case _: Throwable => "null" }
+      } catch {
+        case NonFatal(e) =>
+          System.err.println(s"[graft] bench digest vs $prevPath skipped: ${errText(e)}")
+          "null"
+      }
     }
-    println(s"""{"metric":"total","value":${math.rint(total * 1000) / 1000},"unit":"sec","n":${results.count(_._2.nonEmpty)},"n_errors":${errors.size},"n_rebuild_contaminated":${rebuilds.size},"slowest":$slowest,"digest":$digest,$envJson,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${math.rint(total * 1000) / 1000},"unit":"sec","n":${results.count(_._2.nonEmpty)},"n_errors":${errors.size},"n_warmup_errors":${warmupErrors.size},"n_rebuild_contaminated":${rebuilds.size},"slowest":$slowest,"digest":$digest,$envJson,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -37,11 +37,12 @@ object JdbcQueries {
       "q58_jdbc_agg_pushdown",
       (s, dir) => {
         val url = JdbcSource.derbyUrl("graftdb")
+        val table = JdbcSource.freshTable("CUST_AGG")
         JdbcSource.write(
           Tables.load(s, dir, "customer")
             .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal")),
-          url, "CUST_AGG")
-        JdbcSource.readCatalog(s, "CUST_AGG")
+          url, table)
+        JdbcSource.readCatalog(s, table)
           .groupBy(col("c_mktsegment"))
           .agg(count(lit(1)).as("n"),
             sum(col("c_custkey")).as("key_sum"),

@@ -113,7 +113,7 @@ object ModelQueries {
         ArtifactGuard.stamp(s, path, Some(fp))
       }
     })
-    s.read.parquet(s"$path/weights")
+    Tables.readParquet(s, s"$path/weights")
   }
 
   private def lrScored(s: org.apache.spark.sql.SparkSession, dir: String) = {
@@ -687,11 +687,16 @@ object ModelQueries {
         // Overlap them from a small thread pool (guide §2.6: submit
         // independent jobs concurrently so the next fold's stats
         // back-fill the previous one's stragglers). Results are
-        // unchanged: each fold's model sees only its own data.
-        import scala.concurrent.{Await, Future}
+        // unchanged: each fold's model sees only its own data. The
+        // pool is the query's own, one thread per fold, so the
+        // blocking driver actions never hold threads of the shared
+        // global pool.
+        import scala.concurrent.{Await, ExecutionContext, Future}
         import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val folds = Await.result(Future.sequence((0 until 3).map { f =>
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+        implicit val ec: ExecutionContext =
+          ExecutionContext.fromExecutorService(pool)
+        val folds = try Await.result(Future.sequence((0 until 3).map { f =>
           Future {
             val train = d.filter(col("doc_id") % 3 =!= f)
             val test = d.filter(col("doc_id") % 3 === f)
@@ -705,7 +710,7 @@ object ModelQueries {
                 round(col("n_correct").cast("double") /
                   col("n").cast("double"), 6).as("acc"))
           }
-        }), Duration.Inf)
+        }), Duration.Inf) finally pool.shutdown()
         folds.reduce(_ unionByName _).orderBy(col("fold"))
       },
       Some(s"""

@@ -36,43 +36,20 @@ object Artifacts {
     s"$root/$kind/${dataDir.replaceAll("[^A-Za-z0-9]", "_")}_" +
       sha8(dataDir) + s"_$params"
 
-  private val countCache =
-    scala.collection.concurrent.TrieMap[String, Long]()
-
   /** Row count of a parquet file/directory from footers only — no
     * SparkSession (artifact paths whose name bakes in a data-derived
     * parameter, e.g. the IVF quantizer's corpus-sized nLists, must be
     * derivable at oracle-SQL materialization time, before any session
-    * exists). Footer reads are O(files), not O(rows); cached per JVM
-    * keyed by path PLUS the root-status mtime (advisor r13: the
-    * stress harnesses `mode("overwrite")` tables at a stable path
-    * within one JVM — a path-only key would hand the sizing law the
-    * PREVIOUS corpus's count while the fingerprint guard rebuilds
-    * over the new data: an index sized and path-keyed for data that
-    * no longer exists. Overwrite bumps the directory mtime, so the
-    * mtime-qualified key misses and the footers are re-read). Goes
-    * through the Hadoop FS API, so an HDFS/S3 artifact root works
+    * exists). Footer reads are O(files), not O(rows), and are cached
+    * in the path's [[graft.Tables.ParquetMeta]] entry, keyed by path
+    * plus the root-status mtime: the stress harnesses
+    * `mode("overwrite")` tables at a stable path within one JVM, and a
+    * path-only key would hand the sizing law the PREVIOUS corpus's
+    * count while the fingerprint guard rebuilds over the new data.
+    * Goes through the Hadoop FS API, so an HDFS/S3 artifact root works
     * unchanged.
     */
-  def parquetRowCount(path: String): Long = {
-    import org.apache.hadoop.conf.Configuration
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = new Configuration()
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val mtime = fs.getFileStatus(p).getModificationTime
-    countCache.getOrElseUpdate(s"$path@$mtime", {
-      val files =
-        if (fs.getFileStatus(p).isDirectory)
-          fs.listStatus(p).map(_.getPath)
-            .filter(_.getName.endsWith(".parquet")).toSeq
-        else Seq(p)
-      files.map { f =>
-        val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-        try r.getRecordCount finally r.close()
-      }.sum
-    })
-  }
+  def parquetRowCount(path: String): Long =
+    graft.Tables.parquetMeta(path,
+      new org.apache.hadoop.conf.Configuration()).rowCount
 }

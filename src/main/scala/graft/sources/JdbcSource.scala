@@ -151,13 +151,28 @@ object JdbcSource {
     spark.read.table(s"$name.$table")
   }
 
+  private val tableSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** A table name no other call in this JVM gets: `base` plus a
+    * sequence number. Queries that land a frame in the shared Derby
+    * database write to their own table, so two overlapping runs never
+    * drop or overwrite the table the other is still reading. The
+    * returned frames read lazily, so a table stays until the JVM ends:
+    * one per call. Numbers restart with each JVM, so the next run's
+    * first calls overwrite the tables a run leaves behind.
+    */
+  def freshTable(base: String): String =
+    s"${base}_${tableSeq.incrementAndGet()}"
+
   /** Round-trip a DataFrame through the RDBMS and read it back with a
     * filter — the q37 shape: predicate + projection run INSIDE the
-    * database (at scale: only matching rows cross the wire).
+    * database (at scale: only matching rows cross the wire). Each call
+    * lands in its own [[freshTable]] named after `table`.
     */
   def roundTrip(spark: SparkSession, src: DataFrame, table: String): DataFrame = {
     val url = derbyUrl("graftdb")
-    write(src, url, table)
-    read(spark, url, table)
+    val own = freshTable(table)
+    write(src, url, own)
+    read(spark, url, own)
   }
 }

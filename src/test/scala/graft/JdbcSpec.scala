@@ -30,6 +30,28 @@ class JdbcSpec extends SparkSpec {
     assert(got == expected)
   }
 
+  test("two overlapping round-trips under one table name each read " +
+      "back their own rows") {
+    val nation = Tables.load(spark, sf0001, "nation")
+    val parts = Seq(1, 2).map(r => nation.filter(col("n_regionkey") === r))
+    val start = new java.util.concurrent.CyclicBarrier(parts.size)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(parts.size)
+    val backs =
+      try parts.map { p =>
+        pool.submit(() => {
+          start.await()
+          JdbcSource.roundTrip(spark, p, "NATION_RACE")
+        })
+      }.map(_.get())
+      finally pool.shutdown()
+    // both frames are read only after both writes: a shared table
+    // would hand the first caller the second caller's rows
+    parts.zip(backs).foreach { case (p, back) =>
+      val want = p.collect().map(_.toString).sorted.toSeq
+      assert(back.collect().map(_.toString).sorted.toSeq == want)
+    }
+  }
+
   test("DSv2 catalog route: aggregates and group-by push into the " +
       "database (PushedAggregates / PushedGroupByExpressions)") {
     val nation = Tables.load(spark, sf0001, "nation")
